@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import shuffle_parts
+from ..session import run_legs, shuffle_parts
 
 # --- deterministic train/val/test split -----------------------------------
 
@@ -596,14 +596,9 @@ def decontamination_panel(
             .localCheckpoint(eager=True)
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as _pool:
-        _legs = [
-            _pool.submit(fn)
-            for fn in (_leg_exact, _leg_fuzzy, _leg_sem, _leg_emb_ids)
-        ]
-        exact, fuzzy, sem_hit, emb_ids = [f.result() for f in _legs]
+    exact, fuzzy, sem_hit, emb_ids = run_legs(
+        _leg_exact, _leg_fuzzy, _leg_sem, _leg_emb_ids
+    )
     fz = F.coalesce(F.col("fz"), F.lit(False))
     he = F.coalesce(F.col("he"), F.lit(False))
     sm = F.coalesce(F.col("sm"), F.lit(False))

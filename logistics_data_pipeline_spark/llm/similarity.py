@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import shuffle_parts
+from ..session import run_legs, shuffle_parts
 
 
 # 0.4 keeps the registered query non-trivial on the synthetic
@@ -3125,35 +3125,26 @@ def ann_recall_panel(
     stragglers with the other legs' tasks). Results are identical by
     construction: each leg is deterministic and lands in the same
     union slot."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        f_truth = pool.submit(
-            lambda: knn_bruteforce(emb, n_queries, k)
-            .select("query_id", F.col("neighbor_id").alias("t_id"))
-            .localCheckpoint(eager=True)
-        )
-        legs_in = {
-            "ivf": ivf if ivf is not None else (lambda: knn_ivf(emb, n_queries, k)),
-            "ivfpq": ivfpq
-            if ivfpq is not None
-            else (lambda: knn_ivfpq(emb, n_queries, k)),
-            "graph_beam": graph_beam
-            if graph_beam is not None
-            else (lambda: knn_graph_beam(emb, n_queries, k)),
-            "graph_pq": graph_pq
-            if graph_pq is not None
-            else (lambda: knn_graph_beam_pq(emb, n_queries, k)),
-        }
-        futs = {
-            name: pool.submit(df) if callable(df) else None
-            for name, df in legs_in.items()
-        }
-        legs_df = {
-            name: futs[name].result() if futs[name] is not None else legs_in[name]
-            for name in legs_in
-        }
-        truth = f_truth.result()
+    legs_in = {
+        "ivf": ivf if ivf is not None else (lambda: knn_ivf(emb, n_queries, k)),
+        "ivfpq": ivfpq
+        if ivfpq is not None
+        else (lambda: knn_ivfpq(emb, n_queries, k)),
+        "graph_beam": graph_beam
+        if graph_beam is not None
+        else (lambda: knn_graph_beam(emb, n_queries, k)),
+        "graph_pq": graph_pq
+        if graph_pq is not None
+        else (lambda: knn_graph_beam_pq(emb, n_queries, k)),
+    }
+    lazy = [name for name, df in legs_in.items() if callable(df)]
+    truth, *built = run_legs(
+        lambda: knn_bruteforce(emb, n_queries, k)
+        .select("query_id", F.col("neighbor_id").alias("t_id"))
+        .localCheckpoint(eager=True),
+        *(legs_in[name] for name in lazy),
+    )
+    legs_df = {**legs_in, **dict(zip(lazy, built))}
 
     def leg(name, df):
         hits = truth.alias("t").join(
@@ -6571,6 +6562,35 @@ NSW_LAYERED_ROUNDS = 4  # round budget when the layered entry seeds the beam
 NSW_EXACT_BOUND = 4096  # exact all-pairs graph build up to here
 
 
+def _salted_md5(salt: int):
+    """md5(vec_id:salt) — the seeded-order device the graph family
+    shares (beam entry point, top layer, NN-descent ring)."""
+    return F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(f":{salt}")))
+
+
+def _mirror(edges: DataFrame) -> DataFrame:
+    """(src, dst, cosine) ∪ (dst, src, cosine): the reverse edges of a
+    scored edge frame added, duplicates kept."""
+    return edges.unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "cosine")
+    )
+
+
+def _top_edges(edges: DataFrame, k: int) -> DataFrame:
+    """Each src's top-``k`` (src, dst, cosine) by (cosine DESC, dst ASC)."""
+    w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
+    return (
+        edges.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("src", "dst", "cosine")
+    )
+
+
+def _by_score(score: str):
+    """Per-query ranking window: ``score`` DESC, vec_id ASC."""
+    return Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("vec_id"))
+
+
 def _knn_graph_scored(corpus: DataFrame, m: int = NSW_M) -> DataFrame:
     """``_knn_graph`` WITH the build cosines kept: (src, dst, cosine),
     symmetrized and distinct. Factored out in OPTIMIZATION r12 so
@@ -6587,18 +6607,13 @@ def _knn_graph_scored(corpus: DataFrame, m: int = NSW_M) -> DataFrame:
     n_corpus = corpus.count()
     if n_corpus <= NSW_EXACT_BOUND:
         scored = embedding_neardup(corpus, threshold=-1.0)
-        both = scored.select(
-            F.col("a_id").alias("src"), F.col("b_id").alias("dst"), "cosine"
-        ).unionByName(
-            scored.select(
-                F.col("b_id").alias("src"), F.col("a_id").alias("dst"), "cosine"
-            )
-        )
-        w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
-        out_edges = (
-            both.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= m)
-            .select("src", "dst", "cosine")
+        out_edges = _top_edges(
+            _mirror(
+                scored.select(
+                    F.col("a_id").alias("src"), F.col("b_id").alias("dst"), "cosine"
+                )
+            ),
+            m,
         )
     else:
         n_bits, band_bits = _srp_dims_for_n(n_corpus)
@@ -6606,11 +6621,7 @@ def _knn_graph_scored(corpus: DataFrame, m: int = NSW_M) -> DataFrame:
         out_edges = _nn_descent_edges(corpus, k=m, sigs=sigs).select(
             "src", "dst", "cosine"
         )
-    return out_edges.unionByName(
-        out_edges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "cosine"
-        )
-    ).distinct()
+    return _mirror(out_edges).distinct()
 
 
 def _knn_graph(corpus: DataFrame, m: int = NSW_M) -> DataFrame:
@@ -6715,49 +6726,75 @@ def knn_graph_beam(
     cos = F.round(
         _dot(F.col("q"), F.col("c")) / (F.col("qn") * F.col("cn")), 6
     ).alias("cosine")
-    wb = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    visited = _beam_search(queries, corpus, graph, cos, beam, rounds, salt, layered)
+    if visited_out is not None:
+        # Test hook (ADVICE r10): expose the final visited frame so the
+        # sub-linear-scan property — |scored corpus| < |corpus| — is
+        # assertable instead of documented. Checkpointed already; no
+        # extra jobs unless the caller acts on it.
+        visited_out.append(visited)
+    return (
+        visited.withColumn("rank", F.row_number().over(_by_score("cosine")))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            "cosine",
+            F.col("rank").cast("int").alias("rank"),
+        )
+        .orderBy("query_id", "rank")
+    )
+
+
+def _beam_search(
+    query_side: DataFrame,
+    points: DataFrame,
+    graph: DataFrame,
+    score,
+    beam: int,
+    rounds: int,
+    salt: int,
+    layered: bool,
+) -> DataFrame:
+    """The beam traversal ``knn_graph_beam`` and ``knn_graph_beam_pq``
+    share; returns the checkpointed (query_id, vec_id, <score>) visited
+    set. ``query_side`` is the broadcast query frame keyed by
+    query_id, ``points`` the vertex table keyed by vec_id, and
+    ``score`` the aliased per-(query, vertex) score over their joined
+    columns — full-precision cosine over (queries, corpus), or ADC over
+    (LUT, codes), so the PQ search never touches a full vector before
+    its re-rank.
+
+    Seed: one md5-min entry vertex (``salt``), or with ``layered`` each
+    query's best-scoring vertex of the ⌈√n⌉ md5-sampled top layer
+    (``NSW_LAYER_SALT``; the count is a metadata-cheap sizing action
+    on the caller's checkpointed points). Each of ``rounds`` rounds
+    expands the top-``beam`` visited vertices per query through one
+    broadcast join against the edge table, drops already-visited
+    vertices with a broadcast anti join, scores the rest and
+    localCheckpoints the grown visited set, so the plan stays one
+    round deep."""
     if layered:
-        # ⌈√n⌉-vertex top layer by md5 order (its own salt so the layer
-        # is independent of the single-entry salt); seed = each query's
-        # nearest layer vertex. The count is on the checkpointed corpus
-        # frame — a metadata-cheap sizing action, same n the SQL twin's
-        # COUNT(*) OVER () sees.
-        n_layer = math.ceil(math.sqrt(corpus.count()))
-        layer = (
-            corpus.orderBy(
-                F.md5(
-                    F.concat(
-                        F.col("vec_id").cast("string"),
-                        F.lit(f":{NSW_LAYER_SALT}"),
-                    )
-                ),
-                "vec_id",
-            )
-            .limit(n_layer)
-            .select("vec_id")
-        )
-        visited = (
-            queries.crossJoin(F.broadcast(layer.join(corpus, "vec_id")))
-            .select("query_id", "vec_id", cos)
-            .withColumn("rn", F.row_number().over(wb))
-            .filter(F.col("rn") <= 1)
-            .select("query_id", "vec_id", "cosine")
-            .localCheckpoint(eager=True)
-        )
+        n_pool, pool_salt = math.ceil(math.sqrt(points.count())), NSW_LAYER_SALT
     else:
-        entry = (
-            corpus.orderBy(
-                F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(f":{salt}"))),
-                "vec_id",
-            )
-            .limit(1)
-            .select("vec_id")
-        )
+        n_pool, pool_salt = 1, salt
+    pool = (
+        points.orderBy(_salted_md5(pool_salt), "vec_id")
+        .limit(n_pool)
+        .select("vec_id")
+    )
+    visited = query_side.crossJoin(F.broadcast(pool.join(points, "vec_id"))).select(
+        "query_id", "vec_id", score
+    )
+    name = visited.columns[-1]
+    wb = _by_score(name)
+    if layered:
         visited = (
-            queries.crossJoin(F.broadcast(entry.join(corpus, "vec_id")))
-            .select("query_id", "vec_id", cos)
-            .localCheckpoint(eager=True)
+            visited.withColumn("rn", F.row_number().over(wb))
+            .filter(F.col("rn") <= 1)
+            .select("query_id", "vec_id", name)
         )
+    visited = visited.localCheckpoint(eager=True)
     for _ in range(rounds):
         frontier = (
             visited.withColumn("rn", F.row_number().over(wb))
@@ -6783,28 +6820,12 @@ def knn_graph_beam(
         )
         scored = (
             F.broadcast(cand)
-            .join(corpus, "vec_id")
-            .join(queries, "query_id")
-            .select("query_id", "vec_id", cos)
+            .join(points, "vec_id")
+            .join(query_side, "query_id")
+            .select("query_id", "vec_id", score)
         )
         visited = visited.unionByName(scored).localCheckpoint(eager=True)
-    if visited_out is not None:
-        # Test hook (ADVICE r10): expose the final visited frame so the
-        # sub-linear-scan property — |scored corpus| < |corpus| — is
-        # assertable instead of documented. Checkpointed already; no
-        # extra jobs unless the caller acts on it.
-        visited_out.append(visited)
-    return (
-        visited.withColumn("rank", F.row_number().over(wb))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "cosine",
-            F.col("rank").cast("int").alias("rank"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    return visited
 
 
 def knn_graph_beam_sql(
@@ -7041,14 +7062,16 @@ def knn_graph_beam_pq(
     recall ≥ 0.9 vs brute force pinned in pytest and reported as the
     ``graph_pq`` leg of ``ann_recall_panel`` / tools/ann_eval.py.
 
-    Scale: identical traversal shape to ``knn_graph_beam`` (broadcast
-    frontier joins, O(beam·2m) rows per query per round, corpus-size
-    independent) — but each scoring join fetches 32-byte code arrays
-    instead of the 512-byte float vectors, so even at the doubled
-    ``NSW_PQ_BEAM`` the hot path moves ~4× fewer candidate bytes, and
-    the INDEX the searchers hold in memory is 8× smaller — at 100 TB
-    that is the difference between the vector table fitting the
-    executor fleet or not, which is the entire point.
+    Scale: the traversal is ``knn_graph_beam``'s — both share
+    ``_beam_search`` (broadcast frontier joins, O(beam·2m) rows per
+    query per round, corpus-size independent), here with the codes
+    table as the vertex table and ADC as the score. Each scoring join
+    therefore fetches 32-byte code arrays instead of the 512-byte float
+    vectors, so even at the doubled ``NSW_PQ_BEAM`` the hot path moves
+    ~4× fewer candidate bytes, and the INDEX the searchers hold in
+    memory is 8× smaller — at 100 TB that is the difference between
+    the vector table fitting the executor fleet or not, which is the
+    entire point.
     ``graph``/``books``/``codes`` are injected session assets (a
     serving deployment searches a persisted index; the registry passes
     its cached ``nsw_graph``/``beam_pq_books``/``beam_pq_codes``).
@@ -7104,90 +7127,17 @@ def knn_graph_beam_pq(
         ),
         6,
     ).alias("adc")
-    wb = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("vec_id"))
-
-    if layered:
-        # HNSW-style entry, ADC edition: the ⌈√n⌉ md5-sampled top layer
-        # is scored against every query via its CODES (the seed step
-        # honours the same no-full-vector contract as the traversal);
-        # each query's beam starts at its best-ADC layer vertex. Same
-        # layer salt as the full-precision variant, so both searches
-        # share one layer definition at serving time.
-        n_layer = math.ceil(math.sqrt(codes.count()))
-        layer = (
-            codes.orderBy(
-                F.md5(
-                    F.concat(
-                        F.col("vec_id").cast("string"),
-                        F.lit(f":{NSW_LAYER_SALT}"),
-                    )
-                ),
-                "vec_id",
-            )
-            .limit(n_layer)
-            .select("vec_id")
-        )
-        visited = (
-            lut_df.crossJoin(F.broadcast(layer.join(codes, "vec_id")))
-            .select("query_id", "vec_id", adc)
-            .withColumn("rn", F.row_number().over(wb))
-            .filter(F.col("rn") <= 1)
-            .select("query_id", "vec_id", "adc")
-            .localCheckpoint(eager=True)
-        )
-    else:
-        entry = (
-            codes.orderBy(
-                F.md5(
-                    F.concat(F.col("vec_id").cast("string"), F.lit(f":{salt}"))
-                ),
-                "vec_id",
-            )
-            .limit(1)
-            .select("vec_id")
-        )
-        visited = (
-            lut_df.crossJoin(F.broadcast(entry.join(codes, "vec_id")))
-            .select("query_id", "vec_id", adc)
-            .localCheckpoint(eager=True)
-        )
-    for _ in range(rounds):
-        frontier = (
-            visited.withColumn("rn", F.row_number().over(wb))
-            .filter(F.col("rn") <= beam)
-            .select("query_id", "vec_id")
-        )
-        cand = (
-            F.broadcast(frontier)
-            .join(graph, frontier.vec_id == graph.src)
-            .select("query_id", F.col("dst").alias("vec_id"))
-            .distinct()
-            .join(
-                # broadcast the visited set (OPTIMIZATION r12): it is
-                # (queries × visited-per-query)-sized — the same
-                # query-bounded order as the frontier/cand frames this
-                # loop already broadcasts — and the hint turns a
-                # sort-merge anti join (2 exchanges + 2 sorts per
-                # round) into a broadcast hash anti join.
-                F.broadcast(visited.select("query_id", "vec_id")),
-                ["query_id", "vec_id"],
-                "left_anti",
-            )
-        )
-        scored = (
-            F.broadcast(cand)
-            .join(codes, "vec_id")
-            .join(lut_df, "query_id")
-            .select("query_id", "vec_id", adc)
-        )
-        visited = visited.unionByName(scored).localCheckpoint(eager=True)
+    # the seed honours the traversal's no-full-vector contract too: the
+    # layered entry scores the top layer via its CODES, with the same
+    # layer salt as the full-precision search
+    visited = _beam_search(lut_df, codes, graph, adc, beam, rounds, salt, layered)
 
     # Exact re-rank: the ONLY touch of full float vectors — the top
     # rerank·k ADC candidates per query (n_queries·rerank·k rows,
     # broadcast), the DiskANN "read full precision from disk for the
     # final list" step.
     top_cand = (
-        visited.withColumn("rn", F.row_number().over(wb))
+        visited.withColumn("rn", F.row_number().over(_by_score("adc")))
         .filter(F.col("rn") <= rerank * k)
         .select("query_id", "vec_id")
     )
@@ -7203,13 +7153,12 @@ def knn_graph_beam_pq(
     cos = F.round(
         _dot(F.col("q"), F.col("c")) / (F.col("qn") * F.col("cn")), 6
     ).alias("cosine")
-    wc = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         F.broadcast(top_cand)
         .join(corpus, "vec_id")
         .join(queries, "query_id")
         .select("query_id", "vec_id", cos)
-        .withColumn("rank", F.row_number().over(wc))
+        .withColumn("rank", F.row_number().over(_by_score("cosine")))
         .filter(F.col("rank") <= k)
         .select(
             "query_id",
@@ -7282,7 +7231,14 @@ def nn_descent_graph(
         n_bits, band_bits = _srp_dims(emb)
         sigs = srp_buckets(emb, n_bits=n_bits, band_bits=band_bits)
     sigs = sigs.filter(F.col("vec_id") >= n_queries)
-    edges = _nn_descent_edges(corpus, k=k, iters=iters, salt=salt, sigs=sigs)
+    return _ranked_edges(
+        _nn_descent_edges(corpus, k=k, iters=iters, salt=salt, sigs=sigs)
+    )
+
+
+def _ranked_edges(edges: DataFrame) -> DataFrame:
+    """The graph builders' output shape: one (src, rank, dst, cosine)
+    row per edge, rank by (cosine DESC, dst ASC) within src."""
     w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
     return (
         edges.withColumn("rank", F.row_number().over(w))
@@ -7302,22 +7258,52 @@ def _nn_descent_edges(
     ranks — factored out so the wide-regime ``_knn_graph`` build can
     reuse it at k=m. ``sigs`` must cover exactly the corpus ids (or be
     None to build them at the governor width)."""
-    from ..operators.analytics import exact_row_number
-
     if sigs is None:
         n_bits, band_bits = _srp_dims(corpus)
         sigs = srp_buckets(corpus, n_bits=n_bits, band_bits=band_bits)
-    emb = corpus  # pair scoring looks vectors up by vec_id
+
     # OPTIMIZATION r13 (guide §2.3/§4.1 — phase-probed: the LSH seed,
     # not the descent rounds, dominates this build; ~2.5M candidate
-    # pairs at sf0.1 each shipped BOTH vectors through Arrow): the
-    # bucket-companion set is symmetric by construction and the Arrow
-    # scorer's cosine(a,b) is bit-identical to cosine(b,a) (einsum
-    # products commute, same summation order over dims; norms multiply
-    # commutatively), so only the canonical src<dst half is
-    # deduplicated and scored — the mirror union below restores the
-    # full symmetric scored set with the exact same bits.
-    companions_lo = (
+    # pairs at sf0.1 each shipped BOTH vectors through Arrow): only the
+    # canonical src<dst half of the symmetric bucket-companion set is
+    # scored, and the mirror restores the full scored set bit for bit.
+    def _comp_scored():
+        comp_lo = _verified_pair_cosines(
+            corpus, _companion_pairs(sigs), "src", "dst", -1.0
+        )
+        return _mirror(comp_lo).localCheckpoint(eager=True)
+
+    # a ring pair that is also a bucket companion yields a fully
+    # identical scored row (same orientation-invariant scorer), so the
+    # (src, dst) dedup at the merge replaces a pre-scoring distinct
+    # exactly
+    def _ring_scored():
+        return _verified_pair_cosines(
+            corpus, _ring_pairs(corpus, salt), "src", "dst", -1.0
+        ).localCheckpoint(eager=True)
+
+    # the ring build is latency-bound driver work (range-sampling
+    # exchange, checkpoint, offset collect inside exact_row_number) on a
+    # corpus-id-sized frame — it overlaps the companion scoring jobs
+    comp_scored, ring_scored = run_legs(_comp_scored, _ring_scored)
+    edges = _top_edges(
+        comp_scored.unionByName(ring_scored).dropDuplicates(["src", "dst"]), k
+    ).localCheckpoint(eager=True)
+    for _ in range(iters):
+        edges = _descent_round(corpus, edges, k)
+    return edges
+
+
+def _companion_pairs(sigs: DataFrame, touches=None) -> DataFrame:
+    """Distinct canonical (src < dst) SRP bucket-companion pairs of a
+    (vec_id, band, bucket) signature frame. The companion relation is
+    symmetric, and ``_verified_pair_cosines`` gives bit-identical
+    cosine(a, b) and cosine(b, a) (einsum products commute, same
+    summation order over dims; norms multiply commutatively), so
+    scoring this half and ``_mirror``-ing it reproduces the full scored
+    set. ``touches`` (Column → Column) keeps only pairs with an
+    endpoint in that vertex set."""
+    pairs = (
         sigs.select("band", "bucket", F.col("vec_id").alias("src"))
         .repartition(shuffle_parts(sigs), "band", "bucket")
         .join(
@@ -7325,100 +7311,76 @@ def _nn_descent_edges(
             ["band", "bucket"],
         )
         .filter(F.col("src") < F.col("dst"))
+    )
+    if touches is not None:
+        pairs = pairs.filter(touches(F.col("src")) | touches(F.col("dst")))
+    return pairs.select("src", "dst").distinct()
+
+
+def _ring_pairs(vertices: DataFrame, salt: int) -> DataFrame:
+    """Directed md5-ring successor pairs: each vertex → the next two
+    vertices in (md5(vec_id:salt), vec_id) order, wrapping around, so
+    no vertex (or hash-isolated component) starts an NN-descent with an
+    empty list. The global rank is ``exact_row_number`` (no single-task
+    window); the ranked ids are localCheckpointed."""
+    from ..operators.analytics import exact_row_number
+
+    hashed = vertices.select("vec_id", _salted_md5(salt).alias("h"))
+    ranked, n = exact_row_number(hashed, [F.col("h"), F.col("vec_id")], "r")
+    ranked = ranked.select("vec_id", "r").localCheckpoint(eager=True)
+    js = vertices.sparkSession.range(1, 3).select(F.col("id").cast("int").alias("j"))
+    return (
+        ranked.crossJoin(F.broadcast(js))
+        .select(
+            F.col("vec_id").alias("src"),
+            (((F.col("r") - 1 + F.col("j")) % F.lit(n)) + 1).alias("tr"),
+        )
+        .join(
+            ranked.select(F.col("vec_id").alias("dst"), F.col("r").alias("tr")),
+            "tr",
+        )
+        .filter(F.col("src") != F.col("dst"))
         .select("src", "dst")
+    )
+
+
+def _descent_round(
+    corpus: DataFrame, edges: DataFrame, k: int, first_leg=None
+) -> DataFrame:
+    """One neighbor-of-neighbor round over a (src, dst, cosine) top-k
+    edge frame: symmetrize, score every unseen wedge endpoint pair and
+    keep each vertex's top-``k`` (cosine DESC, dst ASC), checkpointed.
+
+    ``first_leg`` (Column → Column) keeps only wedges whose first leg
+    starts in that vertex set — ``knn_graph_delta``'s localization to
+    the arriving batch, O(|batch|·(2k)²) pairs per round instead of
+    n·(2k)². Candidates are scored in canonical least/greatest form and
+    mirrored back (the ``_companion_pairs`` argument): wedge ∪
+    mirror(wedge) is symmetric, so this scores exactly its pairs (with
+    no filter the wedge set is itself symmetric, and its canonical form
+    is its src<dst half). ``both`` is symmetric too, so the anti join
+    commutes with mirroring. Under a shuffled wedge join both
+    orientations of a pair come out of their middle vertex's partition,
+    so the partial aggregate ahead of the distinct's exchange folds
+    them before the shuffle."""
+    both = _mirror(edges).dropDuplicates(["src", "dst"])
+    x = both.alias("x")
+    if first_leg is not None:
+        x = x.filter(first_leg(F.col("src")))
+    wedge = x.join(both.alias("y"), F.col("x.dst") == F.col("y.src")).select(
+        F.col("x.src").alias("src"), F.col("y.dst").alias("dst")
+    )
+    cand_lo = (
+        wedge.filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("src"),
+            F.greatest("src", "dst").alias("dst"),
+        )
         .distinct()
+        .join(both.select("src", "dst"), ["src", "dst"], "left_anti")
     )
-    def _ring_scored():
-        # the ring build is latency-bound driver work (range-sampling
-        # exchange, checkpoint, offset collect inside exact_row_number)
-        # on a corpus-id-sized frame — run it on its own driver thread
-        # (guide §2.6) so it overlaps the companion scoring jobs
-        hashed = corpus.select(
-            "vec_id",
-            F.md5(
-                F.concat(F.col("vec_id").cast("string"), F.lit(f":{salt}"))
-            ).alias("h"),
-        )
-        ranked, n = exact_row_number(hashed, [F.col("h"), F.col("vec_id")], "r")
-        ranked = ranked.select("vec_id", "r").localCheckpoint(eager=True)
-        js = emb.sparkSession.range(1, 3).select(F.col("id").cast("int").alias("j"))
-        ring = (
-            ranked.crossJoin(F.broadcast(js))
-            .select(
-                F.col("vec_id").alias("src"),
-                (((F.col("r") - 1 + F.col("j")) % F.lit(n)) + 1).alias("tr"),
-            )
-            .join(
-                ranked.select(F.col("vec_id").alias("dst"), F.col("r").alias("tr")),
-                "tr",
-            )
-            .filter(F.col("src") != F.col("dst"))
-            .select("src", "dst")
-        )
-        # a ring pair that is also a bucket companion yields a fully
-        # identical scored row (same orientation-invariant scorer), so
-        # the (src, dst) dedup at the merge replaces the old
-        # pre-scoring distinct exactly
-        return _verified_pair_cosines(emb, ring, "src", "dst", -1.0).localCheckpoint(
-            eager=True
-        )
-
-    def _comp_scored():
-        comp_lo = _verified_pair_cosines(emb, companions_lo, "src", "dst", -1.0)
-        return comp_lo.unionByName(
-            comp_lo.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "cosine"
-            )
-        ).localCheckpoint(eager=True)
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f_comp = _pool.submit(_comp_scored)
-        _f_ring = _pool.submit(_ring_scored)
-        comp_scored = _f_comp.result()
-        ring_scored = _f_ring.result()
-    w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
-    edges = (
-        comp_scored.unionByName(ring_scored)
-        .dropDuplicates(["src", "dst"])
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("src", "dst", "cosine")
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(iters):
-        both = edges.unionByName(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "cosine"
-            )
-        ).dropDuplicates(["src", "dst"])
-        # the wedge set is symmetric (`both` is), so only the canonical
-        # src<dst half is deduplicated, anti-joined and scored; the
-        # mirror union restores the full set bit-identically (the
-        # scorer is orientation-invariant — see the seed note above)
-        cand_lo = (
-            both.alias("x")
-            .join(both.alias("y"), F.col("x.dst") == F.col("y.src"))
-            .select(F.col("x.src").alias("src"), F.col("y.dst").alias("dst"))
-            .filter(F.col("src") < F.col("dst"))
-            .distinct()
-            .join(both.select("src", "dst"), ["src", "dst"], "left_anti")
-        )
-        sc_lo = _verified_pair_cosines(emb, cand_lo, "src", "dst", -1.0)
-        scored = sc_lo.unionByName(
-            sc_lo.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "cosine"
-            )
-        )
-        edges = (
-            both.unionByName(scored)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select("src", "dst", "cosine")
-            .localCheckpoint(eager=True)
-        )
-    return edges
+    scored = _mirror(_verified_pair_cosines(corpus, cand_lo, "src", "dst", -1.0))
+    return _top_edges(both.unionByName(scored), k).localCheckpoint(eager=True)
 
 
 def nn_descent_graph_sql(
@@ -7612,50 +7574,15 @@ def knn_graph_delta(
         n_bits, band_bits = _srp_dims(emb)
         sigs = srp_buckets(emb, n_bits=n_bits, band_bits=band_bits)
     sigs = sigs.filter(F.col("vec_id") >= n_queries)
-    from ..operators.analytics import exact_row_number
 
     def _seed_scored():
-        # OPTIMIZATION r13: canonical-half scoring (see _nn_descent_edges
-        # — the bucket-companion set and the ring ∪ mirror(ring) union
-        # are both symmetric, and the Arrow scorer is
-        # orientation-invariant bit-for-bit), so dedup + score src<dst
-        # pairs only and mirror the scored rows back.
-        cand0 = (
-            sigs.select("band", "bucket", F.col("vec_id").alias("src"))
-            .repartition(shuffle_parts(sigs), "band", "bucket")
-            .join(
-                sigs.select("band", "bucket", F.col("vec_id").alias("dst")),
-                ["band", "bucket"],
-            )
-            .filter(F.col("src") < F.col("dst"))
-            .filter(is_new(F.col("src")) | is_new(F.col("dst")))
-            .select("src", "dst")
-            .distinct()
-        )
-        new_hashed = corpus.filter(is_new(F.col("vec_id"))).select(
-            "vec_id",
-            F.md5(
-                F.concat(F.col("vec_id").cast("string"), F.lit(f":{salt}"))
-            ).alias("h"),
-        )
-        ranked, n = exact_row_number(new_hashed, [F.col("h"), F.col("vec_id")], "r")
-        ranked = ranked.select("vec_id", "r").localCheckpoint(eager=True)
-        js = emb.sparkSession.range(1, 3).select(F.col("id").cast("int").alias("j"))
-        ring = (
-            ranked.crossJoin(F.broadcast(js))
-            .select(
-                F.col("vec_id").alias("src"),
-                (((F.col("r") - 1 + F.col("j")) % F.lit(n)) + 1).alias("tr"),
-            )
-            .join(
-                ranked.select(F.col("vec_id").alias("dst"), F.col("r").alias("tr")),
-                "tr",
-            )
-            .filter(F.col("src") != F.col("dst"))
-            .select("src", "dst")
-        )
+        # OPTIMIZATION r13: canonical-half scoring (see _companion_pairs)
+        # — the ring ∪ mirror(ring) union is symmetric too, so its pairs
+        # join the companions in least/greatest form
+        ring = _ring_pairs(corpus.filter(is_new(F.col("vec_id"))), salt)
         pairs0_lo = (
-            cand0.unionByName(
+            _companion_pairs(sigs, touches=is_new)
+            .unionByName(
                 ring.select(
                     F.least("src", "dst").alias("src"),
                     F.greatest("src", "dst").alias("dst"),
@@ -7664,14 +7591,7 @@ def knn_graph_delta(
             .distinct()
         )
         sc_lo = _verified_pair_cosines(corpus, pairs0_lo, "src", "dst", -1.0)
-        return (
-            sc_lo.unionByName(
-                sc_lo.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst"), "cosine"
-                )
-            )
-            .localCheckpoint(eager=True)
-        )
+        return _mirror(sc_lo).localCheckpoint(eager=True)
 
     def _old_scored():
         if old_scored is not None:  # built here: cosines already attached
@@ -7683,78 +7603,27 @@ def knn_graph_delta(
 
     # The seed branch (SRP bucket companions + md5 ring, scored) and the
     # old-edge branch (the from-scratch build, or the injected graph's
-    # re-score) are independent until the merge — run them on two driver
-    # threads (guide §2.6) so the old-graph build's straggler tail is
-    # back-filled by the seed branch's jobs. Values unchanged: both
-    # branches are deterministic and meet at the same union.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f_seed = _pool.submit(_seed_scored)
-        _f_old = _pool.submit(_old_scored)
-        sc0 = _f_seed.result()
-        old_scored = _f_old.result()
-    w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
+    # re-score) are independent until the merge — run them as two legs
+    # (guide §2.6) so the old-graph build's straggler tail is back-filled
+    # by the seed branch's jobs. Values unchanged: both branches are
+    # deterministic and meet at the same union.
+    sc0, old_scored = run_legs(_seed_scored, _old_scored)
     # Deterministic merge (ADVICE r12): a pair can appear in BOTH
     # branches, and the two scorers agree only after 6-dp rounding —
     # dropDuplicates would keep an arbitrary survivor if a ulp ever
     # flipped the round. MAX(cosine) per pair is order-independent and
     # the same hash-aggregate shape (no extra shuffle).
-    edges = (
+    edges = _top_edges(
         old_scored.unionByName(sc0)
         .groupBy("src", "dst")
-        .agg(F.max("cosine").alias("cosine"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= m)
-        .select("src", "dst", "cosine")
-        .localCheckpoint(eager=True)
-    )
+        .agg(F.max("cosine").alias("cosine")),
+        m,
+    ).localCheckpoint(eager=True)
+    # wedges whose FIRST leg starts at a batch vertex; the mirror lets
+    # old vertices receive the same discoveries
     for _ in range(rounds):
-        both = edges.unionByName(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "cosine"
-            )
-        ).dropDuplicates(["src", "dst"])
-        # wedges whose FIRST leg starts at a batch vertex; the mirror
-        # union lets old vertices receive the same discoveries — the
-        # localization that keeps each round O(|batch|·(2m)²)
-        wedge = (
-            both.alias("x")
-            .filter(is_new(F.col("src")))
-            .join(both.alias("y"), F.col("x.dst") == F.col("y.src"))
-            .select(F.col("x.src").alias("src"), F.col("y.dst").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-        )
-        # canonical-half scoring: wedge ∪ mirror(wedge) is symmetric, so
-        # its canonical form is least/greatest per wedge pair; `both` is
-        # symmetric too, so the anti-join commutes with mirroring and
-        # the scored mirror restores the exact candidate set
-        cand_lo = (
-            wedge.select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-            )
-            .distinct()
-            .join(both.select("src", "dst"), ["src", "dst"], "left_anti")
-        )
-        sc_lo = _verified_pair_cosines(corpus, cand_lo, "src", "dst", -1.0)
-        scored = sc_lo.unionByName(
-            sc_lo.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "cosine"
-            )
-        )
-        edges = (
-            both.unionByName(scored)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= m)
-            .select("src", "dst", "cosine")
-            .localCheckpoint(eager=True)
-        )
-    return (
-        edges.withColumn("rank", F.row_number().over(w))
-        .select("src", F.col("rank").cast("int").alias("rank"), "dst", "cosine")
-        .orderBy("src", "rank")
-    )
+        edges = _descent_round(corpus, edges, m, first_leg=is_new)
+    return _ranked_edges(edges)
 
 
 def knn_graph_delta_sql(
@@ -7923,7 +7792,8 @@ def graph_delta_stream(
     ids (vectors join from the static table inside the fold — ids on
     the wire, no float round-trip), drained with
     ``maxFilesPerTrigger=1`` + availableNow through a checkpointed
-    ``foreachBatch``. Each fold calls ``knn_graph_delta`` with the
+    ``foreachBatch`` (the ``_replay_fold`` driver ``ivf_delta_stream``
+    shares). Each fold calls ``knn_graph_delta`` with the
     micro-batch's group predicate as ``is_new`` and the running graph
     as ``graph``, then eagerly localCheckpoints the updated index —
     the foreachBatch analogue of writing the graph table back to the
@@ -7936,10 +7806,6 @@ def graph_delta_stream(
     restart test (an existing non-empty src_dir is reused as-is);
     ``on_fold(j)`` observes fold order. Returns the final graph in
     ``nn_descent_graph``'s (src, rank, dst, cosine) shape."""
-    import os
-    import shutil
-    import tempfile
-
     corpus = emb.filter(F.col("vec_id") >= n_queries)
     batch_pred = (F.col("vec_id") % batch_mod) == 0
 
@@ -7952,23 +7818,7 @@ def graph_delta_stream(
         )
     state = {"graph": graph.localCheckpoint(eager=True)}
 
-    own_dirs = []
-    if src_dir is None:
-        src_dir = tempfile.mkdtemp(prefix="graphdelta_src_")
-        own_dirs.append(src_dir)
-    if checkpoint_dir is None:
-        checkpoint_dir = tempfile.mkdtemp(prefix="graphdelta_ckpt_")
-        own_dirs.append(checkpoint_dir)
-
-    def fold(mb, epoch_id):
-        r = mb.agg(
-            F.min("grp").alias("a"), F.max("grp").alias("b"),
-            F.count("*").alias("n"),
-        ).first()
-        if r.n == 0:
-            return
-        assert r.a == r.b, f"micro-batch spans groups {r.a}..{r.b}"
-        j = int(r.a)
+    def step(j, mb):
         arrived = (
             (F.col("vec_id") < n_queries)
             | ~batch_pred
@@ -7986,17 +7836,54 @@ def graph_delta_stream(
         if on_fold is not None:
             on_fold(j)
 
+    _replay_fold(
+        spark, corpus, batch_pred, grp, n_groups, src_dir, checkpoint_dir, step
+    )
+    return state["graph"]
+
+
+def _replay_fold(
+    spark, ids, batch_pred, grp, n_groups, src_dir, checkpoint_dir, step
+) -> None:
+    """The replay-and-fold driver the stream-maintained indexes share:
+    the arriving ids (``ids`` rows where ``batch_pred``) land as one
+    JSON file of (vec_id, grp) per replay day ``grp(vec_id)`` in
+    ``src_dir`` — unless it is already non-empty (a restart reuses it
+    as-is) — with mtimes increasing so the file source drains them in
+    day order. ``readStream`` with ``maxFilesPerTrigger=1`` and
+    ``availableNow`` then feeds a checkpointed ``foreachBatch`` that
+    asserts each non-empty micro-batch holds exactly one day ``j`` and
+    calls ``step(j, mb)``. A directory left as None is a temp dir owned
+    and removed here."""
+    import os
+    import shutil
+    import tempfile
+
+    own_dirs = []
+    if src_dir is None:
+        src_dir = tempfile.mkdtemp(prefix="replay_src_")
+        own_dirs.append(src_dir)
+    if checkpoint_dir is None:
+        checkpoint_dir = tempfile.mkdtemp(prefix="replay_ckpt_")
+        own_dirs.append(checkpoint_dir)
+
+    def fold(mb, epoch_id):
+        r = mb.agg(
+            F.min("grp").alias("a"), F.max("grp").alias("b"),
+            F.count("*").alias("n"),
+        ).first()
+        if r.n == 0:
+            return
+        assert r.a == r.b, f"micro-batch spans groups {r.a}..{r.b}"
+        step(int(r.a), mb)
+
     try:
         if not os.listdir(src_dir):
-            # one file per replay day, mtimes increasing so the file
-            # source drains them in group order
             for j in range(n_groups):
-                tmp = tempfile.mkdtemp(prefix="graphdelta_day_")
+                tmp = tempfile.mkdtemp(prefix="replay_day_")
                 try:
                     (
-                        corpus.filter(
-                            batch_pred & (grp(F.col("vec_id")) == j)
-                        )
+                        ids.filter(batch_pred & (grp(F.col("vec_id")) == j))
                         .select("vec_id", grp(F.col("vec_id")).alias("grp"))
                         .coalesce(1)
                         .write.mode("overwrite")
@@ -8024,7 +7911,6 @@ def graph_delta_stream(
     finally:
         for d in own_dirs:
             shutil.rmtree(d, ignore_errors=True)
-    return state["graph"]
 
 
 def ivf_delta_stream(
@@ -8068,10 +7954,6 @@ def ivf_delta_stream(
     (``cents``/``cells`` are injectable serving assets, as in
     ``ivf_delta_assign``). Returns the final (vec_id, cell)
     assignment frame."""
-    import os
-    import shutil
-    import tempfile
-
     corpus = emb.filter(F.col("vec_id") >= n_queries).select(
         "vec_id", "embedding"
     )
@@ -8087,23 +7969,7 @@ def ivf_delta_stream(
         cells = _cosine_argmax(_explode_vecs(corpus.filter(~batch_pred)), cents)
     state = {"cells": cells.localCheckpoint(eager=True)}
 
-    own_dirs = []
-    if src_dir is None:
-        src_dir = tempfile.mkdtemp(prefix="ivfdelta_src_")
-        own_dirs.append(src_dir)
-    if checkpoint_dir is None:
-        checkpoint_dir = tempfile.mkdtemp(prefix="ivfdelta_ckpt_")
-        own_dirs.append(checkpoint_dir)
-
-    def fold(mb, epoch_id):
-        r = mb.agg(
-            F.min("grp").alias("a"), F.max("grp").alias("b"),
-            F.count("*").alias("n"),
-        ).first()
-        if r.n == 0:
-            return
-        assert r.a == r.b, f"micro-batch spans groups {r.a}..{r.b}"
-        j = int(r.a)
+    def step(j, mb):
         batch_vecs = corpus.join(
             F.broadcast(mb.select("vec_id")), "vec_id", "left_semi"
         )
@@ -8115,40 +7981,7 @@ def ivf_delta_stream(
         if on_fold is not None:
             on_fold(j)
 
-    try:
-        if not os.listdir(src_dir):
-            for j in range(n_groups):
-                tmp = tempfile.mkdtemp(prefix="ivfdelta_day_")
-                try:
-                    (
-                        corpus.filter(
-                            batch_pred & (grp(F.col("vec_id")) == j)
-                        )
-                        .select("vec_id", grp(F.col("vec_id")).alias("grp"))
-                        .coalesce(1)
-                        .write.mode("overwrite")
-                        .json(tmp)
-                    )
-                    parts = [
-                        f for f in os.listdir(tmp)
-                        if f.startswith("part-") and f.endswith(".json")
-                    ]
-                    dst = os.path.join(src_dir, f"day{j:04d}.json")
-                    shutil.move(os.path.join(tmp, parts[0]), dst)
-                    os.utime(dst, (1_600_000_000 + j, 1_600_000_000 + j))
-                finally:
-                    shutil.rmtree(tmp, ignore_errors=True)
-        q = (
-            spark.readStream.schema("vec_id LONG, grp LONG")
-            .option("maxFilesPerTrigger", 1)
-            .json(src_dir)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        for d in own_dirs:
-            shutil.rmtree(d, ignore_errors=True)
+    _replay_fold(
+        spark, corpus, batch_pred, grp, n_groups, src_dir, checkpoint_dir, step
+    )
     return state["cells"]

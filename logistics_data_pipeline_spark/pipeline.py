@@ -31,7 +31,6 @@ from .operators.star import (
     dim_order,
     dim_status,
     dim_time,
-    fact_event,
     fact_event_fast,
 )
 from .operators.validity import invalid_events, valid_events
@@ -50,13 +49,12 @@ def build_warehouse(
     bronze: DataFrame,
     restamp: datetime | None = None,
     persist: bool = True,
-    fast_fact: bool = True,
 ) -> dict[str, DataFrame]:
     """Bronze → staging → valid/invalid → star, as lazy DataFrames.
 
-    ``fast_fact`` uses the join-free fact formulation (one shuffle,
-    proven output-identical to the six-join reference shape — see
-    star.fact_event_fast); pass False for the reference-shaped build.
+    The fact table uses the join-free formulation (one shuffle, proven
+    output-identical to the six-join reference shape — see
+    star.fact_event_fast; tests keep star.fact_event as its oracle).
     """
     stg = stage_events(bronze, restamp=restamp)
     valid = valid_events(stg)
@@ -68,11 +66,7 @@ def build_warehouse(
     d_status = dim_status(valid)
     d_carrier = dim_carrier(valid)
     d_order = dim_order(valid)
-    fact = (
-        fact_event_fast(valid)
-        if fast_fact
-        else fact_event(valid, d_order, d_time, d_status, d_location, d_carrier)
-    )
+    fact = fact_event_fast(valid)
     return {
         "stg_logistics_events": stg,
         "int_valid_logistics_events": valid,

@@ -125,6 +125,30 @@ def release_tracked_persists(blocking: bool = False) -> int:
     return n
 
 
+def run_legs(*fns) -> list:
+    """Run independent zero-arg legs on driver threads and return their
+    results in argument order — the one way operators overlap
+    independent Spark jobs (the scheduler back-fills each leg's
+    stragglers with the other legs' tasks).
+
+    Each target is wrapped with ``pyspark.inheritable_thread_target``
+    at submit time, so jobs a leg starts carry the caller's job group,
+    description and tags instead of running unattributed on a fresh
+    JVM thread. A leg's exception re-raises here once every leg has
+    finished."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    # a leg thread has no active session of its own (nested legs, or a
+    # foreachBatch callback), so fall back to the process-wide one
+    spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
+    wrap = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futs = [pool.submit(wrap(fn)) for fn in fns]
+        return [f.result() for f in futs]
+
+
 def get_spark(app_name: str = "logistics-data-pipeline-spark") -> SparkSession:
     """Build (or reuse) a local session sized from the environment.
 

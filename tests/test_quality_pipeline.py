@@ -129,8 +129,20 @@ def test_fact_fast_equals_join_build(spark):
                 estimated_delivery="2024-01-10"),
         ],
     )
-    a = build_warehouse(bronze, persist=False, fast_fact=True)["fact_event"]
-    b = build_warehouse(bronze, persist=False, fast_fact=False)["fact_event"]
+    from logistics_data_pipeline_spark.operators import star
+    from logistics_data_pipeline_spark.operators.staging import stage_events
+    from logistics_data_pipeline_spark.operators.validity import valid_events
+
+    valid = valid_events(stage_events(bronze))
+    a = star.fact_event_fast(valid)
+    b = star.fact_event(
+        valid,
+        star.dim_order(valid),
+        star.dim_time(valid),
+        star.dim_status(valid),
+        star.dim_location(valid),
+        star.dim_carrier(valid),
+    )
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 

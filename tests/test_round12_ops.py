@@ -484,3 +484,23 @@ def test_knn_graph_beam_pq_layered_recall_floor(spark, sf_dir):
         ).collect()
     }
     assert len(got & truth) / len(truth) >= 0.9
+
+
+@pytest.mark.parametrize("fn_name", ["graph_delta_stream", "ivf_delta_stream"])
+def test_delta_stream_owns_and_removes_its_default_dirs(
+    spark, sf_dir, tmp_path, monkeypatch, fn_name
+):
+    """With neither ``src_dir`` nor ``checkpoint_dir`` passed, the
+    replay driver makes its own temp dirs, folds every replay day in
+    order, and leaves nothing behind."""
+    import tempfile
+
+    from logistics_data_pipeline_spark.adapters.testdata import load_table
+    from logistics_data_pipeline_spark.llm import similarity as sim
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    emb = load_table(spark, sf_dir, "embeddings")
+    folds: list[int] = []
+    getattr(sim, fn_name)(spark, emb, n_groups=3, on_fold=folds.append)
+    assert folds == [0, 1, 2], folds
+    assert list(tmp_path.iterdir()) == []
